@@ -8,7 +8,8 @@ import java.nio.file.{Files, Paths}
   * plan evidence the optimization rounds commit alongside the code.
   *
   * Usage: runMain graft.PlanSnap <tag> <query> [<query> ...]
-  *   (SPARK_GRAFT_PLANS_DIR selects the output dir, default plans/r16;
+  *   (SPARK_GRAFT_PLANS_DIR, required, selects the output dir — no default,
+  *   so a new round cannot write into an earlier round's evidence dir;
   *   SPARK_GRAFT_SF_DIR selects the data dir, default sf0.1 — plans are
   *   dumped under the BENCH session settings so join strategies match the
   *   timed runs, not PlanDump's local[4] PLANS.md settings.)
@@ -17,7 +18,8 @@ object PlanSnap {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanSnap <tag> <query> [<query>...]")
     val tag = args(0)
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r16")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "")
+    require(outDir.nonEmpty, "set SPARK_GRAFT_PLANS_DIR to the plan output dir (e.g. plans/r17)")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

@@ -897,9 +897,12 @@ object CurateQueries extends Catalog {
     // window + bloom subtree — r15/r16 JobProbe measured ~1–1.8 s of PURE
     // driver-side plan analysis per run (guide §5: the driver should do
     // almost no data work; §7.3 planning-time bottleneck). The checkpoint
-    // truncates every downstream reference to a LogicalRDD; the frame is
-    // materialized INSIDE the query's own first action (no precompute),
-    // and the blocks are batch-sized. Execution-mode trade (same as the
+    // truncates every downstream reference to a LogicalRDD. It is NOT
+    // deferred to the query's first action: under AQE even a lazy
+    // localCheckpoint runs the batch stage's shuffle stages while the
+    // frame is CONSTRUCTED, so merely building this query (a plan dump, a
+    // test) executes stages 1-2. The bench still times it, as it times
+    // construction plus action. The blocks are batch-sized. Execution-mode trade (same as the
     // BPE/graph loops): checkpoint blocks are executor-local, so on a
     // real cluster an executor loss mid-query fails the job loudly and
     // the ingest re-runs from parquet — acceptable for a per-batch ingest

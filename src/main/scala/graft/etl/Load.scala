@@ -1,7 +1,11 @@
 package graft.etl
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ops.Relational
 
 /** Load layer — reference parity for `etl/pipeline.py:239-310` (K1-K5,
@@ -12,6 +16,11 @@ import graft.ops.Relational
   * keyed upsert is anti-join + union (one shuffle on the key — the MERGE
   * building block on immutable storage); lineage columns are constants per
   * run, stamped once at plan time (NOT per-row current_timestamp()).
+  *
+  * `loadAll` starts every table's refresh at once: the six tables are
+  * independent, and each refresh is two small jobs (empty probe + write)
+  * whose cost at reference scale is driver latency, not work, so overlapping
+  * them keeps the executors busy instead of idling between jobs.
   */
 final class Load(warehouse: String) {
 
@@ -120,7 +129,9 @@ final class Load(warehouse: String) {
   }
 
   /** K3: INSERT-OR-REPLACE one keyed row into a table (pipeline.py:286-296),
-    * creating it if absent (K5's CREATE IF NOT EXISTS).
+    * creating it if absent (K5's CREATE IF NOT EXISTS). The stored table is
+    * read with the row's schema, checked against a committed footer, so the
+    * read infers nothing (no job) and a drifted table fails loudly.
     */
   def upsertRow(spark: SparkSession, name: String, keys: Seq[String],
                 row: DataFrame): Unit = {
@@ -128,7 +139,7 @@ final class Load(warehouse: String) {
     val fs = Load.fsFor(spark, path)
     val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
     val merged =
-      if (exists) Relational.upsertByKey(spark.read.parquet(path), row, keys)
+      if (exists) Relational.upsertByKey(Load.readDeclared(spark, path, row.schema), row, keys)
       else row
     Load.replaceTable(spark, merged, path)
   }
@@ -145,16 +156,45 @@ final class Load(warehouse: String) {
       Schemas.EtlRuns)
 
   /** Load every transformed table (K1/K2/K4) and return per-table rows
-    * written (A1 — pipeline.py:269-284).
+    * written (A1 — pipeline.py:269-284). The tables load concurrently, one
+    * thread each, each with `fullRefresh`'s single-scan contract. Returns or
+    * throws only after EVERY table has finished (`runAll`), so no write
+    * lands after a caller records the failure, and no cached fan-out frame
+    * is released while a table still reads it.
     */
   def loadAll(tables: Map[String, DataFrame], runId: String,
-              loadedAt: String): Map[String, Long] =
-    tables.map { case (name, df) =>
-      name -> fullRefresh(withLineage(df, runId, loadedAt), name)
-    }
+              loadedAt: String): Map[String, Long] = {
+    val names = tables.keys.toSeq
+    names.zip(Load.runAll(names.map(name =>
+      () => fullRefresh(withLineage(tables(name), runId, loadedAt), name)))).toMap
+  }
 }
 
 object Load {
+
+  /** Run independent driver-side Spark actions concurrently, at most
+    * `maxThreads` at a time, and return their results in input order.
+    * Waits for EVERY action before returning or throwing: the first failure
+    * in input order is rethrown with the others suppressed, so nothing an
+    * action does happens after the caller sees the failure. The pool is made
+    * per call, so its threads inherit the caller's Spark local properties
+    * (job group, description, scheduler pool).
+    */
+  private def runAll[T](actions: Seq[() => T], maxThreads: Int = Int.MaxValue): Seq[T] = {
+    if (actions.isEmpty) return Seq.empty
+    val pool = Executors.newFixedThreadPool(math.min(maxThreads, actions.size))
+    val futures =
+      try pool.invokeAll(actions.map(a => (() => a()): Callable[T]).asJava).asScala.toSeq
+      finally pool.shutdown()
+    val outcomes = futures.map(f =>
+      try Success(f.get()) catch { case e: ExecutionException => Failure(e.getCause) })
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.map(_.get)
+    }
+  }
 
   /** Execute `write` over `df` with a row-count metric OBSERVED on the write
     * pass itself (`Dataset.observe` → CollectMetrics): the count costs no
@@ -179,18 +219,42 @@ object Load {
     * no data pages are touched. The post-commit accounting pass for writes
     * whose plan shape rules out an exactly-once observe metric.
     */
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
+  def parquetRowCount(spark: SparkSession, path: String): Long =
+    committedParquetFiles(spark, path).map(f => withFooter(spark, f)(_.getRecordCount)).sum
+
+  /** `path` read with the DECLARED `schema`, after a driver-side check (one
+    * committed file's footer, no job) that the stored columns are exactly
+    * `schema`'s names and types. A schema-less read would launch a footer
+    * inference job, and a declared read alone would return a missing column
+    * as NULL; a drifted table throws here instead.
+    */
+  private[etl] def readDeclared(spark: SparkSession, path: String,
+                                schema: StructType): DataFrame = {
+    committedParquetFiles(spark, path).take(1).foreach { f =>
+      val stored = withFooter(spark, f)(r =>
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
+          .convert(r.getFileMetaData.getSchema))
+      def cols(s: StructType) = s.fields.map(c => c.name -> c.dataType).toSeq.sortBy(_._1)
+      require(cols(stored) == cols(schema),
+        s"$path schema drift: stored ${stored.simpleString}, expected ${schema.simpleString}")
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The committed parquet data files under `path`. A not-yet-created
+    * table has none, so the before-count of a first append is 0, not a
+    * FileNotFoundException. UNCOMMITTED files don't count: a crashed or
+    * in-flight job leaves `_temporary/.../part-*.parquet` attempts that the
+    * committer never promoted — counting them over-reports (and
+    * double-reports retried tasks). Readers skip underscore/dot-prefixed
+    * paths; so does this walk.
+    */
+  private def committedParquetFiles(spark: SparkSession,
+                                    path: String): Iterator[org.apache.hadoop.fs.LocatedFileStatus] = {
     val fs = fsFor(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
-    // a not-yet-created table has zero rows — the before-count of a first
-    // append must not throw FileNotFoundException
-    if (!fs.exists(root)) return 0L
-    val conf = spark.sparkContext.hadoopConfiguration
+    if (!fs.exists(root)) return Iterator.empty
     val rootDepth = root.depth()
-    // UNCOMMITTED files don't count: a crashed or in-flight job leaves
-    // `_temporary/.../part-*.parquet` attempts that the committer never
-    // promoted — counting them over-reports (and double-reports retried
-    // tasks). Readers skip underscore/dot-prefixed paths; so does this walk.
     def committed(p: org.apache.hadoop.fs.Path): Boolean = {
       var cur = p
       while (cur != null && cur.depth() > rootDepth) {
@@ -201,17 +265,16 @@ object Load {
       true
     }
     val it = fs.listFiles(root, true)
-    var sum = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet") && committed(f.getPath)) {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try sum += reader.getRecordCount
-        finally reader.close()
-      }
-    }
-    sum
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") && committed(f.getPath))
+  }
+
+  private def withFooter[T](spark: SparkSession, f: org.apache.hadoop.fs.FileStatus)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f,
+        spark.sparkContext.hadoopConfiguration))
+    try read(reader) finally reader.close()
   }
 
   /** FileSystem for `path`'s own scheme — FileSystem.get(conf) alone
@@ -275,14 +338,15 @@ object Load {
     * the instant between the two renames (Parquet directories have no
     * transaction log to do better with). Leaves already at/below their
     * target file count are untouched, so re-running is cheap and
-    * idempotent; independent leaves compact CONCURRENTLY (each leaf job is
-    * small — serial execution would idle the cluster once per leaf ×
-    * thousands of leaves). Same single-writer precondition as `compact`.
+    * idempotent; independent leaves compact CONCURRENTLY, up to 8 at once
+    * (each leaf job is small — serial execution would idle the cluster once
+    * per leaf × thousands of leaves). A failed leaf is rethrown only after
+    * every other leaf has finished, so no rewrite is still running when the
+    * caller sees the failure. Same single-writer precondition as `compact`.
     * Returns (filesBefore, filesAfter) summed over all leaves.
     */
   def compactPartitioned(spark: SparkSession, path: String,
-                         targetFileBytes: Long = 128L * 1024 * 1024,
-                         maxConcurrentLeaves: Int = 8): (Int, Int) = {
+                         targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val fs = fsFor(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     val rootEntries = fs.listStatus(root)
@@ -348,18 +412,7 @@ object Load {
         }
       }
     }
-    val leafList = leaves(root)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(maxConcurrentLeaves, leafList.size)))
-    val results =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(leafList.map(l =>
-            scala.concurrent.Future(compactLeaf(l)))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+    val results = runAll(leaves(root).map(l => () => compactLeaf(l)), maxThreads = 8)
     fs.delete(staging, true)
     fs.delete(trash, true)
     (results.map(_._1).sum, results.map(_._2).sum)

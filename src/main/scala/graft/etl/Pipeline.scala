@@ -9,7 +9,11 @@ import java.time.format.DateTimeFormatter
   * metrics row; failures record a `Failed: <msg>` row and re-raise.
   *
   * In Spark the extract→transform chain per table is ONE lazy plan; the only
-  * actions are the per-table writes and counts in the load phase.
+  * actions are the per-table writes and counts in the load phase, which run
+  * concurrently (`Load.loadAll`). The load returns or throws only after every
+  * table has finished, so a failed run's `Failed: <msg>` row is written after
+  * the last table write, and the cached fan-out frames are unpersisted only
+  * once nothing reads them.
   */
 final case class RunResult(runId: String, status: String,
                            rowsByTable: Map[String, Long], totalRows: Long)

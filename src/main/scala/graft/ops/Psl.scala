@@ -252,14 +252,6 @@ object Psl {
   lazy val snapshotFull: Seq[PslRule] = parseFull(
     (resource(SnapshotResource) ++ resource(SnapshotExtResource)).iterator)
 
-  /** Production path for the join rule: parse a complete publicsuffix.org
-    * file (~10 k rules) into the general rule table.
-    */
-  def loadFull(path: String): Seq[PslRule] = {
-    val src = scala.io.Source.fromFile(path, "UTF-8")
-    try parseFull(src.getLines()) finally src.close()
-  }
-
   /** Registrable domain under the FULL PSL algorithm, as `outCol` on
     * `df`. K broadcast hash joins (one per rule label count — all tiny,
     * all shuffle-free, whole-stage codegen around them), then the

@@ -1425,6 +1425,7 @@ object Relational {
 
   private def histStats(left: DataFrame, right: DataFrame,
                         keys: Seq[String], buckets: Int): HistStats = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     def keyCol(df: DataFrame): Column =
       if (keys.size == 1) df(keys.head)
       else struct(keys.map(df(_)): _*)
@@ -1461,7 +1462,6 @@ object Relational {
                            broadcastRowLimit: Long = 10000L,
                            skewShareBpLimit: Long = 2000L,
                            salts: Int = 8): (DataFrame, String) = {
-    require(buckets >= 1, "buckets must be >= 1")
     routeWithStats(left, right, keys,
       histStats(left, right, keys, buckets),
       broadcastRowLimit, skewShareBpLimit, salts)

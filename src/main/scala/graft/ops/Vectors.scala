@@ -520,38 +520,6 @@ object Vectors {
     ()
   }
 
-  /** Bucketed-table index lifecycle via `Load.writeBucketed`/`appendBucketed`:
-    * banded keys bucketed by `bkey` (the probe join's key — the corpus side
-    * of every future band join reads pre-shuffled, zero exchange), normed
-    * vectors by `id` (the verify join-back's key). Probe with
-    * `spark.table(s"${name}_normed")` / `spark.table(s"${name}_banded")`.
-    */
-  def writeCosineIndexBucketed(load: graft.etl.Load, corpus: DataFrame,
-                               name: String, buckets: Int,
-                               planesPerBand: Int = 2, bands: Int = 16, dims: Int = 64,
-                               idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val (nv, banded) = cosineIndex(corpus, planesPerBand, bands, dims, idCol, vecCol)
-    load.writeBucketed(nv, s"${name}_normed", buckets, Seq("id"))
-    load.writeBucketed(banded, s"${name}_banded", buckets, Seq("bkey"))
-    nv.unpersist()
-    ()
-  }
-
-  /** Bucketed twin of `appendToCosineIndex`. */
-  def appendToCosineIndexBucketed(load: graft.etl.Load, survivors: DataFrame,
-                                  name: String, buckets: Int,
-                                  planesPerBand: Int = 2, bands: Int = 16, dims: Int = 64,
-                                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = survivors.sparkSession
-    cosinePreflight(spark.table(s"${name}_normed"), spark.table(s"${name}_banded"),
-      planesPerBand, bands, dims)
-    val (nv, banded) = cosineIndex(survivors, planesPerBand, bands, dims, idCol, vecCol)
-    load.appendBucketed(nv, s"${name}_normed", buckets, Seq("id"))
-    load.appendBucketed(banded, s"${name}_banded", buckets, Seq("bkey"))
-    nv.unpersist()
-    ()
-  }
-
   /** `cosineIncremental` against a STORED corpus index (the two frames from
     * `cosineIndex`, read back): per ingest only the batch is projected and
     * banded; the corpus contributes a probe join on its stored band keys
@@ -680,18 +648,6 @@ object Vectors {
         .map("%02x".format(_)).mkString
       if (hex.charAt(0) >= '8') 1.0 else -1.0
     }
-  }
-
-  /** Sign-random-projection LSH bucket key: one bit per hyperplane (sign of
-    * the projection), concatenated to a bit-string. Vectors in the same
-    * bucket are ANN candidates. Narrow per-row computation, codegen'd.
-    */
-  def annBucket(vec: Column, planes: Int = 8, dims: Int = 64): Column = {
-    val signs = hyperplaneSigns(planes, dims)
-    concat((0 until planes).map { p =>
-      val plane = array(signs(p).map(lit): _*)
-      when(dot(vec, plane) > 0, lit("1")).otherwise(lit("0"))
-    }: _*)
   }
 
   /** IVF-Flat ANN: coarse quantization + inverted lists — the other

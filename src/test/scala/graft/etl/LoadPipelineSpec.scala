@@ -1,6 +1,8 @@
 package graft.etl
 
 import graft.SparkSpec
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import org.apache.spark.sql.functions.col
 import scala.util.{Failure, Success, Try}
 
 /** K1-K5, A1-A2 and the run lifecycle (reference etl/pipeline.py:239-354). */
@@ -291,6 +293,119 @@ class LoadPipelineSpec extends SparkSpec {
     assert(out == Map("r1" -> "Failed: x", "r2" -> "Success"))
   }
 
+  test("upsertRow reads the stored table with the row's schema; drift throws") {
+    val load = new Load(tmpDir("wh"))
+    val row = load.metricsRow(spark, "r1", "s", "c", "Success", 6, 239L, 0.07)
+    // A declared-schema read alone would return a missing column as NULL
+    // and drop an extra one; the footer check turns each into an error.
+    Seq(
+      "missing" -> row.drop("duration_seconds"),
+      "retyped" -> row.withColumn("tables_loaded", col("tables_loaded").cast("long")),
+      "extra" -> row.withColumn("note", col("status"))
+    ).foreach { case (name, stored) =>
+      stored.write.parquet(load.tablePath(name))
+      val e = intercept[IllegalArgumentException] {
+        load.upsertRow(spark, name, Seq("run_id"), row)
+      }
+      assert(e.getMessage.contains("schema drift"), e.getMessage)
+      assert(spark.read.parquet(load.tablePath(name)).columns.toSeq == stored.columns.toSeq)
+    }
+    // a matching table reads without a schema-inference job (a schema-less
+    // read of the same path launches one)
+    load.upsertRow(spark, "etl_runs", Seq("run_id"), row)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsDuring(body: => Unit): Int = {
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+      jobs.set(0)
+      body
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsDuring(Load.readDeclared(spark, load.tablePath("etl_runs"), row.schema)) == 0)
+      assert(jobsDuring(spark.read.parquet(load.tablePath("etl_runs"))) >= 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("loadAll runs the per-table loads concurrently") {
+    // Each table's one row releases its own latch, then waits for the
+    // other table's. Only loads that overlap can both pass: a serial
+    // loadAll leaves the first table waiting out the timeout.
+    val id = java.util.UUID.randomUUID().toString
+    Seq("a", "b").foreach(t => LoadPipelineSpec.latches.put(s"$id-$t", new CountDownLatch(1)))
+    def gated(mine: String, other: String) = spark.range(0, 1, 1, 1).map { _ =>
+      LoadPipelineSpec.latches.get(s"$id-$mine").countDown()
+      LoadPipelineSpec.latches.get(s"$id-$other").await(30, TimeUnit.SECONDS)
+    }.toDF("met")
+    try {
+      val load = new Load(tmpDir("wh"))
+      val rows = load.loadAll(Map("a" -> gated("a", "b"), "b" -> gated("b", "a")),
+        "run1", "2026-08-12T00:00:00Z")
+      assert(rows == Map("a" -> 1L, "b" -> 1L))
+      Seq("a", "b").foreach { t =>
+        assert(spark.read.parquet(load.tablePath(t)).select("met").as[Boolean]
+          .collect().toSeq == Seq(true), s"table $t waited out its timeout")
+      }
+    } finally Seq("a", "b").foreach(t => LoadPipelineSpec.latches.remove(s"$id-$t"))
+  }
+
+  test("loadAll waits for every table, then rethrows the first failure with " +
+      "the others suppressed") {
+    // The slow table is still writing when both failures are known: a
+    // loadAll that threw on the first failure would return before it
+    // committed.
+    def failing(name: String) = spark.range(0, 1, 1, 1).map { x =>
+      if (x >= 0) throw new IllegalStateException(s"$name failed"); x }.toDF("n")
+    val slow = spark.range(0, 1, 1, 1).map { x => Thread.sleep(1500); x }.toDF("n")
+    val load = new Load(tmpDir("wh"))
+    val e = intercept[Exception] {
+      load.loadAll(Map("slow" -> slow, "bad1" -> failing("bad1"),
+        "bad2" -> failing("bad2")), "run1", "2026-08-12T00:00:00Z")
+    }
+    assert(e.getMessage.contains("bad1 failed"), e.getMessage)
+    assert(e.getSuppressed.map(_.getMessage).toSeq match {
+      case Seq(m) => m.contains("bad2 failed")
+      case _ => false
+    }, e.getSuppressed.toSeq)
+    assert(new java.io.File(s"${load.tablePath("slow")}/_SUCCESS").exists())
+    assert(spark.read.parquet(load.tablePath("slow")).count() == 1L)
+  }
+
+  test("loadAll gives the same rows and tables as fullRefresh per table, " +
+      "empty input still skipped (K2)") {
+    val raw = Seq((1, "x"), (2, "y"), (3, "z")).toDF("k", "v").cache()
+    // two tables over one cached frame, as agents/weapons fan out
+    val tables = Map(
+      "evens" -> raw.filter(col("k") % 2 === 0),
+      "keys" -> raw.select(col("k")),
+      "empty" -> raw.filter(col("k") > 9),
+      "other" -> Seq(7).toDF("n"))
+    val (runId, at) = ("run1", "2026-08-12T00:00:00Z")
+    try {
+      val concurrent = new Load(tmpDir("wh"))
+      val serial = new Load(tmpDir("wh"))
+      val rows = concurrent.loadAll(tables, runId, at)
+      val expected = tables.map { case (n, df) =>
+        n -> serial.fullRefresh(serial.withLineage(df, runId, at), n) }
+      assert(rows == expected)
+      assert(rows == Map("evens" -> 1L, "keys" -> 3L, "empty" -> 0L, "other" -> 1L))
+      def contents(l: Load, n: String) = {
+        val df = spark.read.parquet(l.tablePath(n))
+        (df.schema, df.collect().map(_.toString).sorted.toSeq)
+      }
+      (tables.keySet - "empty").foreach(n =>
+        assert(contents(concurrent, n) == contents(serial, n), n))
+      Seq(concurrent, serial).foreach(l =>
+        assert(!new java.io.File(l.tablePath("empty")).exists()))
+    } finally raw.unpersist()
+  }
+
   private val fixtureBodies = Map(
     "agents" ->
       """{"status":200,"data":[
@@ -335,6 +450,30 @@ class LoadPipelineSpec extends SparkSpec {
     val agents = spark.read.parquet(s"${cfg.warehouse}/agents")
     assert(agents.columns.contains("_etl_run_id"))
     assert(agents.head.getAs[String]("_etl_run_id") == "20260812_060000")
+  }
+
+  test("pipeline run: a failed table write fails the run after every other " +
+      "table committed, with one Failed etl_runs row") {
+    val cfg = PipelineConfig(warehouse = tmpDir("wh"), requestDelayMs = 0)
+    // maps' table path is a link into a regular file: no directory can be
+    // made under it, so its write job fails (an Overwrite write would
+    // simply delete a plain file standing at the path itself).
+    val blocker = java.nio.file.Paths.get(tmpDir("blk"), "file")
+    java.nio.file.Files.writeString(blocker, "not a directory")
+    java.nio.file.Files.createSymbolicLink(
+      java.nio.file.Paths.get(cfg.warehouse, "maps"), blocker.resolve("maps"))
+    val clock = java.time.Instant.parse("2026-08-12T06:00:00Z")
+    intercept[Exception](new Pipeline(spark, cfg, fixtureTransport, () => clock).run())
+    val runs = spark.read.parquet(s"${cfg.warehouse}/etl_runs")
+      .select("run_id", "status").as[(String, String)].collect()
+    assert(runs.length == 1)
+    assert(runs.head._1 == "20260812_060000")
+    assert(runs.head._2.startsWith("Failed: "), runs.head._2)
+    Seq("agents", "abilities", "weapons", "weapon_damage", "gamemodes").foreach { t =>
+      assert(new java.io.File(s"${cfg.warehouse}/$t/_SUCCESS").exists(),
+        s"$t had not committed when run() threw")
+      assert(spark.read.parquet(s"${cfg.warehouse}/$t").count() == 1L, t)
+    }
   }
 
   test("pipeline run: extraction failure degrades to empty tables, still Success") {
@@ -451,4 +590,11 @@ class LoadPipelineSpec extends SparkSpec {
     assert(results.map(_.status) == Seq("Success", "Success"))
     assert(sleeps.toSeq == Seq(6L * 3600 * 1000))
   }
+}
+
+object LoadPipelineSpec {
+  /** Latches the concurrency spec's task closures reach by key: a closure
+    * is serialized into its task, so a captured latch would be a copy.
+    */
+  val latches = new ConcurrentHashMap[String, CountDownLatch]()
 }

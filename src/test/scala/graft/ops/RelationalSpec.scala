@@ -1055,6 +1055,23 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("autoJoin3 and autoJoinWithStrategy reject buckets < 1 before any " +
+      "histogram pass") {
+    val a = Seq((1, 1)).toDF("k1", "av")
+    val b = Seq((1, 2)).toDF("k1", "k2")
+    val c = Seq((2, "x")).toDF("k2", "cv")
+    Seq(0, -1).foreach { n =>
+      val e3 = intercept[IllegalArgumentException] {
+        Relational.autoJoin3WithOrder(a, b, c, Seq("k1"), Seq("k2"), buckets = n)
+      }
+      assert(e3.getMessage.contains("buckets must be >= 1"))
+      val e2 = intercept[IllegalArgumentException] {
+        Relational.autoJoinWithStrategy(a, b, Seq("k1"), buckets = n)
+      }
+      assert(e2.getMessage.contains("buckets must be >= 1"))
+    }
+  }
+
   test("holtForecastBp: hand-traced recurrence, truncation-toward-zero on " +
       "the negative trend step, same-second event_id order, single event") {
     val ts = (s: Long) => new java.sql.Timestamp(s * 1000)
