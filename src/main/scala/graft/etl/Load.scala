@@ -6,21 +6,23 @@ import scala.util.{Failure, Success}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.ops.Relational
 
 /** Load layer — reference parity for `etl/pipeline.py:239-310` (K1-K5,
   * A1-A2), re-targeted from SQLite to Parquet tables under a warehouse
   * directory (one subdir per table).
   *
-  * Scale notes: full refresh is an atomic-enough `SaveMode.Overwrite`; the
-  * keyed upsert is anti-join + union (one shuffle on the key — the MERGE
-  * building block on immutable storage); lineage columns are constants per
-  * run, stamped once at plan time (NOT per-row current_timestamp()).
+  * Scale notes: every table write is ONE Spark job. A full refresh writes
+  * `<table>.staging` and swaps it in by renames, so readers see the old
+  * table until the swap; a rename is metadata-only on local, HDFS and ABFS
+  * file systems, but a full copy on s3a. The keyed upsert of
+  * one driver-local row is a literal key filter over the stored table plus a
+  * union (no join, no broadcast); lineage columns are constants per run,
+  * stamped once at plan time (NOT per-row current_timestamp()).
   *
   * `loadAll` starts every table's refresh at once: the six tables are
-  * independent, and each refresh is two small jobs (empty probe + write)
-  * whose cost at reference scale is driver latency, not work, so overlapping
-  * them keeps the executors busy instead of idling between jobs.
+  * independent, and each refresh is one small write job whose cost at
+  * reference scale is driver latency, not work, so overlapping them keeps
+  * the executors busy instead of idling between jobs.
   */
 final class Load(warehouse: String) {
 
@@ -34,16 +36,15 @@ final class Load(warehouse: String) {
   /** K1+K2: full-refresh write, skipping (and reporting) empty inputs
     * (pipeline.py:273-280). Returns rows written.
     *
-    * SINGLE-scan: the old shape ran `df.count()` before the write — a full
-    * extra pass over the input per load, doubling load cost at 100 TB just
-    * to report rows. Now the skip-empty probe is `isEmpty` (a limit-1 job
-    * that stops at the first non-empty partition) and the row count rides
-    * the write itself as an `observe` metric, so the input is computed once.
+    * SINGLE job, single scan: the input is written to `<table>.staging` with
+    * its row count riding the write as an `observe` metric. An empty input
+    * leaves its staging dir deleted and any earlier table untouched (no
+    * table is created); otherwise the staged dir is swapped in
+    * (`Load.writeStaged`). No probe job decides emptiness ahead of the write.
     */
-  def fullRefresh(df: DataFrame, name: String): Long = {
-    if (df.isEmpty) 0L
-    else Load.writeCounted(df, _.write.mode(SaveMode.Overwrite).parquet(tablePath(name)))
-  }
+  def fullRefresh(df: DataFrame, name: String): Long =
+    Load.writeStaged(df.sparkSession, tablePath(name))(staged =>
+      Load.writeCounted(df, _.write.mode(SaveMode.Overwrite).parquet(staged)))(_ > 0)
 
   /** Bucketed refresh: pre-shuffle the table ONCE on its join/agg key so
     * every later equi-join or aggregation on that key runs with zero
@@ -110,9 +111,10 @@ final class Load(warehouse: String) {
                              partitionCols: Seq[String],
                              targetPartitions: Int = 0,
                              onlyTouchedPartitions: Boolean = false): Long = {
-    // Same single-scan contract as fullRefresh: limit-1 empty probe, row
-    // count observed on the write pass. The repartition happens BELOW the
-    // metric point so CollectMetrics runs in the write (result) stage —
+    // Single-scan contract: a limit-1 empty probe (unlike fullRefresh's
+    // staged write, an empty static overwrite would wipe the table), then
+    // the row count observed on the write pass. The repartition happens
+    // BELOW the metric point so CollectMetrics runs in the write (result) stage —
     // a metric under the exchange would sit in the shuffle-map stage, where
     // re-executed tasks after a fetch failure double-count.
     if (df.isEmpty) 0L
@@ -132,15 +134,25 @@ final class Load(warehouse: String) {
     * creating it if absent (K5's CREATE IF NOT EXISTS). The stored table is
     * read with the row's schema, checked against a committed footer, so the
     * read infers nothing (no job) and a drifted table fails loudly.
+    *
+    * `row` is a driver-local one-row frame, so its key values are collected
+    * without a job and the stored rows it replaces are dropped by a literal
+    * predicate — the whole upsert is the one write job (an anti-join against
+    * the row would add a broadcast job). `coalesce(…, false)` keeps the
+    * anti-join's NULL semantics: a NULL key on either side matches nothing.
     */
   def upsertRow(spark: SparkSession, name: String, keys: Seq[String],
                 row: DataFrame): Unit = {
     val path = tablePath(name)
-    val fs = Load.fsFor(spark, path)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
+    val keyRows = row.select(keys.map(col): _*).collect()
+    require(keyRows.length == 1, s"upsertRow needs a one-row frame, got ${keyRows.length} rows")
     val merged =
-      if (exists) Relational.upsertByKey(Load.readDeclared(spark, path, row.schema), row, keys)
-      else row
+      if (Load.fsFor(spark, path).exists(new org.apache.hadoop.fs.Path(path))) {
+        val replaced = keys.zip(keyRows.head.toSeq)
+          .map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
+        Load.readDeclared(spark, path, row.schema)
+          .filter(!coalesce(replaced, lit(false))).unionByName(row)
+      } else row
     Load.replaceTable(spark, merged, path)
   }
 
@@ -288,17 +300,43 @@ object Load {
   /** Replace the table at `path` with `df` via stage-then-rename. Parquet
     * has no in-place merge; writing straight over `path` (delete + full
     * second write) leaves the table missing for the whole rewrite. Staging
-    * the new data first and swapping with a RENAME shrinks the unprotected
-    * window to one metadata operation and writes the data exactly once.
+    * the new data first and swapping with RENAMES shrinks the unprotected
+    * window to two metadata operations and writes the data exactly once.
     */
-  def replaceTable(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val staged = s"$path.staging"
-    df.write.mode(SaveMode.Overwrite).parquet(staged)
+  def replaceTable(spark: SparkSession, df: DataFrame, path: String): Unit =
+    writeStaged(spark, path)(df.write.mode(SaveMode.Overwrite).parquet(_))(_ => true)
+
+  /** Run `write` into `<path>.staging`, then, if `swap` accepts its result,
+    * replace `path` with the staged dir: the old table is renamed aside to
+    * `<path>.old`, the staged dir renamed in, and only then is `<path>.old`
+    * dropped. A failed rename-in puts the old table back; should that fail
+    * too, its rows stay in `<path>.old` — some copy of the table exists at
+    * every step. The staging dir never outlives the call: it is deleted when
+    * not swapped in, and when the write or the swap throws.
+    */
+  private def writeStaged[T](spark: SparkSession, path: String)(write: String => T)(
+      swap: T => Boolean): T = {
     val fs = fsFor(spark, path)
+    val staged = new org.apache.hadoop.fs.Path(s"$path.staging")
+    val aside = new org.apache.hadoop.fs.Path(s"$path.old")
     val target = new org.apache.hadoop.fs.Path(path)
-    fs.delete(target, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staged), target))
-      sys.error(s"rename $staged -> $path failed")
+    try {
+      val out = write(staged.toString)
+      if (swap(out)) {
+        val hadTable = fs.exists(target)
+        if (hadTable) {
+          fs.delete(aside, true) // stale: the live table is at `target`
+          if (!fs.rename(target, aside)) sys.error(s"rename $path -> $aside failed")
+        }
+        if (!fs.rename(staged, target)) {
+          if (hadTable && !fs.rename(aside, target))
+            sys.error(s"rename $staged -> $path failed; the old table is kept in $aside")
+          sys.error(s"rename $staged -> $path failed")
+        }
+        if (hadTable) fs.delete(aside, true)
+      }
+      out
+    } finally fs.delete(staged, true)
   }
 
   /** Compact a fragmented flat Parquet table to ~`targetFileBytes` files —

@@ -9,11 +9,13 @@ import java.time.format.DateTimeFormatter
   * metrics row; failures record a `Failed: <msg>` row and re-raise.
   *
   * In Spark the extract→transform chain per table is ONE lazy plan; the only
-  * actions are the per-table writes and counts in the load phase, which run
-  * concurrently (`Load.loadAll`). The load returns or throws only after every
-  * table has finished, so a failed run's `Failed: <msg>` row is written after
-  * the last table write, and the cached fan-out frames are unpersisted only
-  * once nothing reads them.
+  * actions are the load phase's per-table writes, one job each with the row
+  * count riding the write, which run concurrently (`Load.loadAll`), and the
+  * one-job `etl_runs` upsert. An empty table is skipped with a WARN, as the
+  * reference does (pipeline.py:273-275). The load returns or throws only
+  * after every table has finished, so a failed run's `Failed: <msg>` row is
+  * written after the last table write, and the cached fan-out frames are
+  * unpersisted only once nothing reads them.
   */
 final case class RunResult(runId: String, status: String,
                            rowsByTable: Map[String, Long], totalRows: Long)
@@ -56,7 +58,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         // dead cache entries. unpersist on a never-cached frame is a no-op.
         finally raw.values.foreach(_.unpersist())
       rows.toSeq.sortBy(_._1).foreach { case (table, n) =>
-        logger.info(s"Loaded $table: $n rows")
+        if (n > 0) logger.info(s"Loaded $table: $n rows")
+        else logger.warn(s"No data to load for $table, skipped")
       }
       val total = rows.values.sum
       val duration = math.rint((System.nanoTime() - t0) / 1e9 * 100) / 100

@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import graft.ops.Relational
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import org.apache.spark.sql.functions.col
 import scala.util.{Failure, Success, Try}
@@ -21,6 +22,14 @@ class LoadPipelineSpec extends SparkSpec {
     val load = new Load(tmpDir("wh"))
     assert(load.fullRefresh(Seq.empty[Int].toDF("n"), "empty") == 0L)
     assert(!new java.io.File(load.tablePath("empty")).exists())
+  }
+
+  test("K2: an empty refresh over an existing table keeps its rows, leaves no staging dir") {
+    val load = new Load(tmpDir("wh"))
+    assert(load.fullRefresh(Seq(1, 2).toDF("n"), "t") == 2L)
+    assert(load.fullRefresh(Seq.empty[Int].toDF("n"), "t") == 0L)
+    assert(spark.read.parquet(load.tablePath("t")).as[Int].collect().sorted.toSeq == Seq(1, 2))
+    assert(!new java.io.File(s"${load.tablePath("t")}.staging").exists())
   }
 
   test("K4: lineage columns constant per run") {
@@ -91,9 +100,9 @@ class LoadPipelineSpec extends SparkSpec {
 
   test("fullRefresh computes its input ONCE (row count rides the write, no pre-count scan)") {
     // A per-row accumulator probe: the old shape (df.count() then write)
-    // evaluated every input row twice. The single-scan contract allows the
-    // full write pass plus the limit-1 isEmpty probe, which touches at most
-    // one partition — nowhere near a second full pass.
+    // evaluated every input row twice. The single-scan contract allows only
+    // the write pass itself, which carries the row count as an observe
+    // metric — nowhere near a second full pass.
     val load = new Load(tmpDir("wh"))
     val acc = spark.sparkContext.longAccumulator("rows-evaluated")
     val n = 10000L
@@ -333,6 +342,96 @@ class LoadPipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("upsertRow matches Relational.upsertByKey when a stored or the update run_id is NULL") {
+    // run_id is declared non-null; these frames relax that to carry NULLs
+    val schema = org.apache.spark.sql.types.StructType(
+      Schemas.EtlRuns.map(_.copy(nullable = true)))
+    def rows(ids: (String, String)*) = spark.createDataFrame(
+      java.util.Arrays.asList(ids.map { case (id, status) =>
+        org.apache.spark.sql.Row(id, "s", "c", status, 6, 239L, 0.07) }: _*), schema)
+    val stored = rows("r1" -> "old", (null, "stored-null"))
+    // a NULL update key replaces nothing; a stored NULL-key row is never matched
+    Seq(
+      rows((null, "update-null")) -> Seq("[null,stored-null]", "[null,update-null]", "[r1,old]"),
+      rows("r1" -> "new") -> Seq("[null,stored-null]", "[r1,new]")
+    ).foreach { case (update, want) =>
+      val load = new Load(tmpDir("wh"))
+      val path = load.tablePath("etl_runs")
+      stored.write.parquet(path)
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.select("run_id", "status").collect().map(_.toString).sorted.toSeq
+      val expected = sorted(Relational.upsertByKey(spark.read.parquet(path), update, Seq("run_id")))
+      assert(expected == want)
+      load.upsertRow(spark, "etl_runs", Seq("run_id"), update)
+      assert(sorted(spark.read.parquet(path)) == expected)
+    }
+  }
+
+  test("a failed swap keeps the old table: put back, else kept in <table>.old") {
+    spark.sparkContext.hadoopConfiguration.set("fs.failrename.impl",
+      classOf[RenameFailingFs].getName)
+    val wh = tmpDir("wh")
+    val path = s"failrename://$wh/t"
+    def stored(p: String) = spark.read.parquet(p).as[Int].collect().sorted.toSeq
+    Load.replaceTable(spark, Seq(1, 2).toDF("n"), path)
+    try {
+      RenameFailingFs.fails = (src, _) => src.getName == "t.staging"
+      intercept[RuntimeException](Load.replaceTable(spark, Seq(9).toDF("n"), path))
+      assert(stored(s"$wh/t") == Seq(1, 2))
+      // the old table cannot be put back either: its rows stay aside
+      RenameFailingFs.fails = (_, dst) => dst.getName == "t"
+      intercept[RuntimeException](Load.replaceTable(spark, Seq(9).toDF("n"), path))
+      assert(!new java.io.File(s"$wh/t").exists())
+      assert(stored(s"$wh/t.old") == Seq(1, 2))
+    } finally RenameFailingFs.fails = (_, _) => false
+    assert(!new java.io.File(s"$wh/t.staging").exists())
+  }
+
+  test("upsertRow rejects a frame that is not one row, also when the table is absent") {
+    val load = new Load(tmpDir("wh"))
+    val two = Seq("r1", "r2").map(id =>
+      load.metricsRow(spark, id, "s", "c", "Success", 6, 239L, 0.07)).reduce(_ union _)
+    intercept[IllegalArgumentException](load.upsertRow(spark, "etl_runs", Seq("run_id"), two))
+    assert(!new java.io.File(load.tablePath("etl_runs")).exists())
+  }
+
+  test("every ETL table write is one Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsDuring(body: => Unit): Int = {
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+      jobs.set(0)
+      body
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+      jobs.get
+    }
+    val load = new Load(tmpDir("wh"))
+    val cfg = PipelineConfig()
+    val raw = Extract.extractAll(spark, fixtureTransport, cfg.baseUrl, cfg.endpoints)
+    val tables = Transforms.transformAll(raw)
+    val row = load.metricsRow(spark, "r2", "s", "c", "Success", 6, 239L, 0.07)
+    load.upsertRow(spark, "etl_runs", Seq("run_id"),
+      load.metricsRow(spark, "r1", "s", "c", "Success", 6, 239L, 0.07))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // distributed inputs: an emptiness probe of a driver-local frame
+      // would run without a job and go unseen here
+      assert(jobsDuring(load.fullRefresh(spark.range(3).toDF("n"), "rows")) == 1)
+      assert(jobsDuring(load.fullRefresh(spark.range(0).toDF("n"), "empty")) == 1)
+      assert(jobsDuring(load.upsertRow(spark, "etl_runs", Seq("run_id"), row)) == 1)
+      assert(tables.size == 6)
+      assert(jobsDuring(load.loadAll(tables, "run1", "at")) == 6)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      raw.values.foreach(_.unpersist())
+    }
+    assert(spark.read.parquet(load.tablePath("etl_runs")).count() == 2L)
+  }
+
   test("loadAll runs the per-table loads concurrently") {
     // Each table's one row releases its own latch, then waits for the
     // other table's. Only loads that overlap can both pass: a serial
@@ -369,7 +468,11 @@ class LoadPipelineSpec extends SparkSpec {
         "bad2" -> failing("bad2")), "run1", "2026-08-12T00:00:00Z")
     }
     assert(e.getMessage.contains("bad1 failed"), e.getMessage)
-    assert(e.getSuppressed.map(_.getMessage).toSeq match {
+    // Spark itself may attach its caller-trace marker to a failed first
+    // action; any other suppressed exception must be bad2's.
+    assert(e.getSuppressed.filterNot(_.getClass.getName ==
+        "org.apache.spark.util.Utils$OriginalTryStackTraceException")
+      .map(_.getMessage).toSeq match {
       case Seq(m) => m.contains("bad2 failed")
       case _ => false
     }, e.getSuppressed.toSeq)
@@ -455,9 +558,9 @@ class LoadPipelineSpec extends SparkSpec {
   test("pipeline run: a failed table write fails the run after every other " +
       "table committed, with one Failed etl_runs row") {
     val cfg = PipelineConfig(warehouse = tmpDir("wh"), requestDelayMs = 0)
-    // maps' table path is a link into a regular file: no directory can be
-    // made under it, so its write job fails (an Overwrite write would
-    // simply delete a plain file standing at the path itself).
+    // maps' table path is a link into a regular file: its staged write job
+    // succeeds, but nothing can be renamed onto the link, so its swap fails
+    // (a plain file at the path would simply be renamed aside and replaced).
     val blocker = java.nio.file.Paths.get(tmpDir("blk"), "file")
     java.nio.file.Files.writeString(blocker, "not a directory")
     java.nio.file.Files.createSymbolicLink(
@@ -474,6 +577,8 @@ class LoadPipelineSpec extends SparkSpec {
         s"$t had not committed when run() threw")
       assert(spark.read.parquet(s"${cfg.warehouse}/$t").count() == 1L, t)
     }
+    assert(new java.io.File(cfg.warehouse).list().filter(_.endsWith(".staging")).isEmpty,
+      new java.io.File(cfg.warehouse).list().toSeq)
   }
 
   test("pipeline run: extraction failure degrades to empty tables, still Success") {
@@ -545,11 +650,24 @@ class LoadPipelineSpec extends SparkSpec {
     val logPath = s"$dir/etl.log"
     val cfg = PipelineConfig(warehouse = tmpDir("wh"), requestDelayMs = 0)
     val logger = new RunLogger(Some(logPath))
+    // the second cycle's maps endpoint returns no rows: maps is skipped
+    // with a WARN, as the reference warns on empty tables
+    val noMaps = new Extract.Transport {
+      def fetch(url: String): Try[String] =
+        if (url.split("/").last.startsWith("maps?")) Success("""{"status":200,"data":[]}""")
+        else fixtureTransport.fetch(url)
+    }
     try {
       val clock = java.time.Instant.parse("2026-08-12T06:00:00Z")
       new Pipeline(spark, cfg, fixtureTransport, () => clock, logger).run()
+      new Pipeline(spark, cfg, noMaps, () => clock.plusSeconds(6 * 3600), logger).run()
     } finally logger.close()
     val lines = scala.io.Source.fromFile(logPath).getLines().toSeq
+    assert(lines.filter(_.contains("[WARNING]")).map(_.split("] ", 2)(1)) ==
+      Seq("No data to load for maps, skipped"))
+    assert(lines.count(_.contains("Loaded maps: ")) == 1)
+    assert(lines.exists(_.contains(
+      "ETL run 20260812_120000 completed: Success, 5 tables, 5 rows")))
     assert(lines.exists(_.contains("Starting ETL run 20260812_060000")))
     assert(lines.exists(_.contains("Extract complete: 5/5 endpoints")))
     assert(lines.exists(_.contains("Loaded agents: 1 rows")))
@@ -597,4 +715,19 @@ object LoadPipelineSpec {
     * is serialized into its task, so a captured latch would be a copy.
     */
   val latches = new ConcurrentHashMap[String, CountDownLatch]()
+}
+
+/** The local file system under the `failrename` scheme, with every rename
+  * for which `RenameFailingFs.fails(src, dst)` holds reporting failure.
+  */
+final class RenameFailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def getScheme: String = "failrename"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !RenameFailingFs.fails(src, dst) && super.rename(src, dst)
+}
+
+object RenameFailingFs {
+  @volatile var fails: (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) => Boolean =
+    (_, _) => false
 }
